@@ -55,15 +55,14 @@ def customer_sales_report(
     run_date: dt.date | str | None = None,
     run_ts: dt.datetime | str | None = None,
     yesterday_quirk: bool = False,
-    broadcast_dims: bool = True,
     persist_intermediate: bool = True,
 ) -> DataFrame:
     """Build the customer-sales-report mart (one row per qualifying sale).
 
-    ``persist_intermediate`` caches the enriched fact before the tiering
-    step; the cache lives until Spark's LRU evicts it (callers looping
-    over many marts in one session can pass ``False``)."""
-    maybe_broadcast = F.broadcast if broadcast_dims else (lambda df: df)
+    ``persist_intermediate`` shares the enriched fact between the tiering
+    step's passes through a lazy ``localCheckpoint``: it is computed by
+    the first action that reads it and released when the result frame is
+    garbage-collected (``False`` recomputes it per pass instead)."""
 
     # FIL: status IN ('Delivered', 'Shipped')  (`fil_isin`).
     fil_sales = sales.filter(F.col("ORDER_STATUS").isin("Delivered", "Shipped"))
@@ -72,7 +71,7 @@ def customer_sales_report(
     jnr_products = (
         fil_sales.alias("s")
         .join(
-            maybe_broadcast(products.alias("p")),
+            F.broadcast(products.alias("p")),
             on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
             how="left",
         )
@@ -131,12 +130,9 @@ def customer_sales_report(
         exp = exp.localCheckpoint(eager=False)
 
     # WIN 1: global percentile tiers — scalable exact percent_rank.
-    # SALE_AMOUNT is near-continuous money (distinct ≈ rows at scale), so
-    # force the range-partitioned path: the broadcast rank map would be
-    # O(n) and its "tiny" window a single-task sort of ~n values.
-    tiered = global_percent_rank(
-        exp, "SALE_AMOUNT", out_col="__pr", descending=True, low_cardinality=False
-    )
+    # SALE_AMOUNT is near-continuous money, so its quantiles spread and
+    # the rank runs inside range buckets (no O(n) map, no global sort).
+    tiered = global_percent_rank(exp, "SALE_AMOUNT", out_col="__pr", descending=True)
     tiered = tiered.withColumn(
         "LOYALTY_TIER",
         F.when(F.col("__pr") <= 0.2, F.lit("Gold"))
@@ -162,7 +158,7 @@ def customer_sales_report(
     jnr_customers = (
         flagged.alias("l")
         .join(
-            maybe_broadcast(customers.alias("c")),
+            F.broadcast(customers.alias("c")),
             on=F.col("l.CUSTOMER_ID") == F.col("c.CUSTOMER_ID"),
             how="left",
         )

@@ -41,7 +41,6 @@ def supplier_performance(
     suppliers: DataFrame,
     run_date: dt.date | str | None = None,
     supplier_key_from: str = "products",
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Build the supplier-performance mart.
 
@@ -51,8 +50,6 @@ def supplier_performance(
     """
     if supplier_key_from not in ("products", "sales"):
         raise ValueError("supplier_key_from must be 'products' or 'sales'")
-
-    maybe_broadcast = F.broadcast if broadcast_dims else (lambda df: df)
 
     # FIL: drop cancelled sales (predicate reaches the scan via Catalyst).
     fil_sales = sales.filter(F.col("ORDER_STATUS") != "Cancelled")
@@ -65,7 +62,7 @@ def supplier_performance(
     jnr_products = (
         fil_sales.alias("s")
         .join(
-            maybe_broadcast(products.alias("p")),
+            F.broadcast(products.alias("p")),
             on=F.col("s.PRODUCT_ID") == F.col("p.PRODUCT_ID"),
             how="left",
         )
@@ -102,7 +99,7 @@ def supplier_performance(
     agg = (
         suppliers.alias("r")
         .join(
-            maybe_broadcast(agg_fact.alias("l")),
+            F.broadcast(agg_fact.alias("l")),
             on=F.col("r.SUPPLIER_ID") == F.col("l.SUPPLIER_ID"),
             how="left",
         )
@@ -145,7 +142,7 @@ def supplier_performance(
     # JNR_3 + null handling: "No sales" default and zero-filled measures
     # (`cond_null_default`, `null_fillna_map`).
     enriched = (
-        agg.join(maybe_broadcast(top_products), on="SUPPLIER_ID", how="left")
+        agg.join(F.broadcast(top_products), on="SUPPLIER_ID", how="left")
         .withColumn(
             "TOP_SELLING_PRODUCT",
             F.coalesce(F.col("TOP_SELLING_PRODUCT").cast("string"), F.lit("No sales")),

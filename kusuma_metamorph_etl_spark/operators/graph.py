@@ -222,6 +222,9 @@ def pagerank(
     Crawl derivatives).  Semantics (declared so the fixed-iteration oracle
     is exact):
 
+    * nodes are the non-NULL ids: an edge with a NULL ``src`` or ``dst``
+      is dropped before normalization and the node census, so it neither
+      counts toward ``n`` nor carries mass;
     * transition probability out of ``u`` is ``w(u,v) / Σ_v w(u,v)``
       (uniform when ``weight_col`` is None);
     * dangling mass (nodes with no out-edges) is redistributed uniformly
@@ -262,7 +265,7 @@ def pagerank(
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), w.alias("w")
-    )
+    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     norm = _ckpt(
         # out_w > 0 guard: a node whose out-edges all carry zero weight

@@ -1,5 +1,9 @@
 """Deterministic value-range bucketing — the shared scaffold for global
-order-statistics operators (`global_percent_rank`, `pack_sequences`).
+order statistics: `windows._global_position` (behind `global_percent_rank`
+and `global_ntile`) and `sampling.pack_sequences` bucket rows with
+:func:`quantile_bucket` and turn per-bucket positions into global ones
+with :func:`bucket_offsets`; `cluster_by_zorder` reuses the bounds for a
+multi-column file layout.
 
 Why not ``repartitionByRange``: its boundaries re-sample on every
 recompute, so a diamond plan's branches can observe *different*
@@ -28,15 +32,16 @@ def quantile_bucket(
     uses (asc: NULLS FIRST … NaN last; desc: NaN first … NULLS LAST), so
     a rank built from these buckets matches ``ORDER BY value`` exactly.
     Routing NaN to -1 with the nulls would flip its position in the
-    descending walk (the old behavior — ranks then disagreed with the
-    broadcast-map path on the same data).  NaN is remapped explicitly
+    descending walk (ranks then disagreed with ``ORDER BY value DESC``).
+    NaN is remapped explicitly
     rather than left to Bucketizer ``keep`` so a NaN that leaked into
     the collected bounds can't make the splits non-increasing and throw.
     Bounds need not be exact quantiles — only fixed — so the 0.001
     relative error is irrelevant to correctness, it only shifts bucket
     balance slightly.  The effective count can collapse below
-    ``num_buckets`` under heavy ties (a constant column yields 1) —
-    callers should fall back to a small-data strategy when it does.
+    ``num_buckets`` under heavy ties (a constant column yields 2, an
+    all-null one 1) — callers need a strategy for collapsed bounds, such
+    as bucketing the distinct values instead of the rows.
     """
     import math
 

@@ -653,11 +653,11 @@ def mart_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT small at 100 TB, so an unpartitioned `F.ntile` window (which
     sorts the whole grain in one task) is out: each score routes
     through `global_ntile` (r19, VERDICT r18 Next #3) — exact ntile via
-    quantile-bucketed global row numbers, the same two-regime scaffold
-    as `win_percent_rank`.  The per-customer aggregate is shared via
-    one lazy localCheckpoint: each of the three scores runs a bounded
-    quantile/cardinality probe (a driver action), and without the
-    materialization every probe would re-run the full orders scan +
+    quantile-bucketed global row numbers, the same scaffold as
+    `win_percent_rank`.  The per-customer aggregate is shared via one
+    lazy localCheckpoint: each of the three scores runs a bounded
+    approxQuantile pass (a driver action), and without the
+    materialization every pass would re-run the full orders scan +
     aggregation (§2.2)."""
     from kusuma_metamorph_etl_spark.functions.numeric import decimal_sum
     from kusuma_metamorph_etl_spark.operators.windows import global_ntile
@@ -670,21 +670,15 @@ def mart_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         decimal_sum(F.col("o_totalprice")).alias("monetary"),
     ).localCheckpoint(eager=False)
-    # Key shapes are known (skip the cardinality probe action): recency
-    # is bounded by the order-date span in days and frequency by the max
-    # orders-per-customer — both tiny distinct sets; monetary is a
-    # near-continuous decimal sum.
     scored = global_ntile(
         per_cust, "recency_days", [F.asc("custkey")], 5, "r_score",
-        descending=False, low_cardinality=True,
+        descending=False,
     )
     scored = global_ntile(
-        scored, "frequency", [F.asc("custkey")], 5, "f_score",
-        descending=True, low_cardinality=True,
+        scored, "frequency", [F.asc("custkey")], 5, "f_score", descending=True
     )
     scored = global_ntile(
-        scored, "monetary", [F.asc("custkey")], 5, "m_score",
-        descending=True, low_cardinality=False,
+        scored, "monetary", [F.asc("custkey")], 5, "m_score", descending=True
     )
     return scored.select(
         "custkey", "recency_days", "frequency", "monetary",
@@ -738,12 +732,11 @@ def mart_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator; the tier quartile runs on the post-agg USER grain — which
     at 100 TB is itself large, so it routes through `global_ntile`
     (r19, VERDICT r18 Next #3) instead of an unpartitioned `F.ntile`
-    window that would sort every user in one task.  n_events is a
-    per-user count (small distinct set → broadcast-offsets regime,
-    probe skipped).  One user-keyed shuffle feeds sessionize and the
-    per-user rollup; the streak branch reuses the day-grain collapse;
-    the 3-join profile is shared via a lazy localCheckpoint so the
-    ntile's offset map doesn't re-run the whole join tree."""
+    window that would sort every user in one task.  One user-keyed
+    shuffle feeds sessionize and the per-user rollup; the streak branch
+    reuses the day-grain collapse; the 3-join profile is shared via a
+    lazy localCheckpoint so the ntile's quantile pass and offsets don't
+    re-run the whole join tree."""
     from kusuma_metamorph_etl_spark.operators.events import (
         activity_streaks,
         sessionize,
@@ -773,8 +766,7 @@ def mart_user_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_user.join(st, "user").join(last, "user").localCheckpoint(eager=False)
     )
     return global_ntile(
-        joined, "n_events", [F.asc("user")], 4, "engagement_tier",
-        descending=True, low_cardinality=True,
+        joined, "n_events", [F.asc("user")], 4, "engagement_tier", descending=True
     ).select(
         "user",
         "n_events",

@@ -31,6 +31,17 @@ def spark():
     return session
 
 
+def rank_regime(df) -> str:
+    """Which regime of ``windows._global_position`` a ranked frame's plan
+    runs: the collapsed one joins its value → rows-before map back on
+    ``__rank_key``; the spread one numbers rows in a ``__bkt``-partitioned
+    window and has no map-back join."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "__rank_key" in plan:
+        return "collapsed"
+    return "spread" if "windowspecdefinition(__bkt" in plan else "unknown"
+
+
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL

@@ -314,6 +314,32 @@ def test_pagerank_zero_weight_outedges_become_dangling(spark):
     assert all(v > 0 for v in rows.values())
 
 
+def test_pagerank_drops_null_id_edges(spark):
+    """Regression: a NULL src/dst used to count as a node in ``n`` while
+    its rank row was filtered out, so Σpr < 1.  NULL ids are not nodes:
+    the ranks equal pagerank over the same edge list without those rows."""
+    from kusuma_metamorph_etl_spark.operators.graph import pagerank
+
+    clean = [(1, 2), (2, 3), (3, 1), (3, 4)]
+    edges = clean + [(1, None), (None, 2), (None, None)]
+    got = {
+        r["node"]: r["pr"]
+        for r in pagerank(
+            spark.createDataFrame(edges, "src long, dst long"), n_iter=10
+        ).collect()
+    }
+    want = {
+        r["node"]: r["pr"]
+        for r in pagerank(
+            spark.createDataFrame(clean, "src long, dst long"), n_iter=10
+        ).collect()
+    }
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+    assert got.keys() == want.keys() == {1, 2, 3, 4}
+    for node, pr in want.items():
+        assert abs(got[node] - pr) < 1e-12, node
+
+
 def test_triangles_per_vertex_hand_computed(spark):
     """K4 plus a pendant edge: every K4 vertex sits in C(3,2)=3
     triangles, the pendant in none; duplicate/reversed/self-loop edges

@@ -158,13 +158,59 @@ def test_percent_rank_range_path_scales(spark, sf_small):
     plan = _plan(
         global_percent_rank(
             orders, "o_totalprice", out_col="pr", descending=True,
-            low_cardinality=False,
         )
     )
     assert plan.count("BroadcastExchange") == 1  # offsets only, never the map
     assert "windowspecdefinition(__bkt" in plan  # rank window is partitioned
     assert plan.count("Exchange SinglePartition") == 1  # offsets branch only
     assert "SortMergeJoin" not in plan  # no map-back join at all
+
+
+def test_global_rank_builds_run_only_quantile_passes(spark):
+    # global_percent_rank / global_ntile pick their regime from the
+    # quantile bounds they need anyway, with no cardinality probe: at
+    # construction, spread input runs exactly ONE driver action (the row
+    # approxQuantile) and collapsed input at most TWO (plus the
+    # distinct-value approxQuantile).  Counted in jobs per job group.
+    # Under AQE one action spans several jobs (each exchange's map stage
+    # is submitted as its own job), so each action's job count is
+    # calibrated by running the same approxQuantile directly.
+    from kusuma_metamorph_etl_spark.operators.windows import (
+        global_ntile,
+        global_percent_rank,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ids = spark.range(0, 4000).select(F.col("id").alias("i"))
+    spread = ids.select("i", (F.col("i") % 997).cast("double").alias("v"))
+    hot = ids.select(
+        "i", F.when(F.col("i") < 3900, F.lit(7.0)).otherwise(F.col("i")).alias("v")
+    )
+    row_pass = jobs(
+        "rank-calib-rows", lambda: spread.stat.approxQuantile("v", [0.5], 0.001)
+    )
+    value_pass = jobs(
+        "rank-calib-values",
+        lambda: hot.groupBy("v").count().stat.approxQuantile("v", [0.5], 0.001),
+    )
+    builds = {
+        "percent_rank": lambda df: global_percent_rank(df, "v", "pr"),
+        "ntile": lambda df: global_ntile(df, "v", [F.asc("i")], 5, "nt"),
+    }
+    for name, build in builds.items():
+        spread_jobs = jobs(f"rank-spread-{name}", lambda: build(spread))
+        hot_jobs = jobs(f"rank-hot-{name}", lambda: build(hot))
+        assert spread_jobs == row_pass, (name, spread_jobs, row_pass)
+        assert hot_jobs <= row_pass + value_pass, (name, hot_jobs)
 
 
 def test_customer_mart_uses_range_percent_rank(spark, sf_small):

@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.operators.joins import asof_join
 from kusuma_metamorph_etl_spark.operators.windows import global_percent_rank
+from tests.conftest import rank_regime
 
 _spark = None
+_SHUFFLE_PARTITIONS = 8  # tiny-data tests (see conftest)
 
 
 def _session():
@@ -24,7 +26,7 @@ def _session():
 
         _spark = get_session()
         _spark.sparkContext.setLogLevel("ERROR")
-        _spark.conf.set("spark.sql.shuffle.partitions", "8")  # tiny-data tests (see conftest)
+        _spark.conf.set("spark.sql.shuffle.partitions", str(_SHUFFLE_PARTITIONS))
     return _spark
 
 
@@ -36,6 +38,29 @@ _FULL = __import__("os").environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
 
 def _ex(n: int) -> int:
     return n if _FULL else max(3, n // 3)
+
+_small_or_null = st.one_of(st.integers(min_value=-5, max_value=5), st.none())
+
+# Spread shape: every value in [-5, 5] at least once plus up to 20 extras,
+# so no value holds 3/4 of the non-null rows and the 1/P and (P-1)/P row
+# quantiles differ — the global-order core takes its spread regime.
+spread_values = st.lists(_small_or_null, max_size=20).flatmap(
+    lambda extra: st.permutations(list(range(-5, 6)) + extra)
+)
+
+# Hot-value shape: one value on more than (P-1)/P of the non-null rows (a
+# constant column, down to a single row, when the tail is empty), so every
+# row quantile returns it — the core takes its collapsed regime.
+hot_values = st.tuples(
+    st.integers(min_value=-5, max_value=5),
+    st.lists(_small_or_null, max_size=8),
+    st.integers(min_value=1, max_value=_SHUFFLE_PARTITIONS),
+).flatmap(
+    lambda hot: st.permutations(
+        [hot[0]] * (_SHUFFLE_PARTITIONS * len(hot[1]) + hot[2]) + hot[1]
+    )
+)
+
 
 def _ts(minutes: int) -> dt.datetime:
     return dt.datetime(2024, 6, 1) + dt.timedelta(minutes=minutes)
@@ -81,76 +106,62 @@ def test_asof_join_matches_bruteforce(lefts, rights):
         assert got[i] == expected, (i, k, m, candidates, got[i])
 
 
-@settings(max_examples=_ex(10), deadline=None)
-@given(
-    values=st.lists(
-        st.one_of(st.integers(min_value=-5, max_value=5), st.none()),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_global_percent_rank_matches_window(values):
-    """Both percent_rank paths (broadcast rank map, range-partitioned
-    prefix-sum) equal Spark's own single-partition window, including tie
-    semantics."""
-    spark = _session()
-    df = spark.createDataFrame(
+def _values_frame(values):
+    return _session().createDataFrame(
         [(i, None if v is None else float(v)) for i, v in enumerate(values)],
         "i long, v double",
     )
-    reference = {
-        r["i"]: r["pr"]
-        for r in df.withColumn(
-            "pr", F.percent_rank().over(Window.orderBy(F.desc("v")))
-        ).collect()
-    }
-    for low_card in (True, False):
-        got = {
+
+
+@settings(max_examples=_ex(10), deadline=None)
+@given(spread=spread_values, hot=hot_values)
+def test_global_percent_rank_matches_window(spread, hot):
+    """Both regimes of the global-order core — picked by the input's
+    shape, asserted on the plan — equal Spark's own single-partition
+    PERCENT_RANK window, including tie semantics and nulls."""
+    for values, regime in ((spread, "spread"), (hot, "collapsed")):
+        df = _values_frame(values)
+        reference = {
             r["i"]: r["pr"]
-            for r in global_percent_rank(
-                df, "v", out_col="pr", descending=True, low_cardinality=low_card
+            for r in df.withColumn(
+                "pr", F.percent_rank().over(Window.orderBy(F.desc("v")))
             ).collect()
         }
-        assert got == reference, f"low_cardinality={low_card}"
+        out = global_percent_rank(df, "v", out_col="pr", descending=True)
+        assert rank_regime(out) == regime, values
+        got = {r["i"]: r["pr"] for r in out.collect()}
+        assert got == reference, (regime, values)
 
 
 @settings(max_examples=_ex(12), deadline=None)
 @given(
-    values=st.lists(
-        st.one_of(st.integers(min_value=-5, max_value=5), st.none()),
-        min_size=1,
-        max_size=40,
-    ),
-    n_tiles=st.integers(min_value=1, max_value=7),
+    spread=spread_values,
+    hot=hot_values,
+    n_tiles=st.integers(min_value=1, max_value=12),
     descending=st.booleans(),
 )
-def test_global_ntile_matches_window(values, n_tiles, descending):
-    """Both global_ntile regimes (broadcast offsets, range-partitioned
-    row numbers) equal Spark's own single-partition NTILE over the same
-    total order — heavy ties, nulls, n < k, and both directions."""
+def test_global_ntile_matches_window(spread, hot, n_tiles, descending):
+    """Both regimes of the global-order core — picked by the input's
+    shape, asserted on the plan — equal Spark's own single-partition
+    NTILE over the same total order: heavy ties, nulls, n < k and both
+    directions."""
     from kusuma_metamorph_etl_spark.operators.windows import global_ntile
 
-    spark = _session()
-    df = spark.createDataFrame(
-        [(i, None if v is None else float(v)) for i, v in enumerate(values)],
-        "i long, v double",
-    )
     order = F.desc("v") if descending else F.asc("v")
-    reference = {
-        r["i"]: r["nt"]
-        for r in df.withColumn(
-            "nt", F.ntile(n_tiles).over(Window.orderBy(order, F.asc("i")))
-        ).collect()
-    }
-    for low_card in (True, False):
-        got = {
+    for values, regime in ((spread, "spread"), (hot, "collapsed")):
+        df = _values_frame(values)
+        reference = {
             r["i"]: r["nt"]
-            for r in global_ntile(
-                df, "v", [F.asc("i")], n_tiles, "nt",
-                descending=descending, low_cardinality=low_card,
+            for r in df.withColumn(
+                "nt", F.ntile(n_tiles).over(Window.orderBy(order, F.asc("i")))
             ).collect()
         }
-        assert got == reference, f"low_cardinality={low_card}"
+        out = global_ntile(
+            df, "v", [F.asc("i")], n_tiles, "nt", descending=descending
+        )
+        assert rank_regime(out) == regime, values
+        got = {r["i"]: r["nt"] for r in out.collect()}
+        assert got == reference, (regime, values)
 
 
 @settings(max_examples=_ex(10), deadline=None)
@@ -422,17 +433,15 @@ def test_connected_components_matches_union_find(edges):
 
 
 def test_percent_rank_constant_column_falls_back():
-    """A constant column yields at most one distinct quantile bound; the
-    range path must fall back to the broadcast map instead of running a
-    degenerate one-bucket window — asserted on the PLAN (both paths give
-    the same values, so a value check alone cannot catch a dead guard)."""
+    """A constant column yields one distinct quantile bound; the core must
+    fall back to its collapsed regime instead of running a degenerate
+    one-bucket window over every row — asserted on the PLAN (both regimes
+    give the same values, so a value check alone cannot catch a dead
+    guard)."""
     spark = _session()
     df = spark.createDataFrame([(i, 5.0) for i in range(10)], "i long, v double")
-    out = global_percent_rank(
-        df, "v", out_col="pr", descending=True, low_cardinality=False
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "__bkt" not in plan  # broadcast-map path, not the bucketed one
+    out = global_percent_rank(df, "v", out_col="pr", descending=True)
+    assert rank_regime(out) == "collapsed"
     rows = out.collect()
     assert all(r["pr"] == 0.0 for r in rows)  # all tied -> rank 1 -> pr 0
 

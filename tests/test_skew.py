@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.operators.skew import salted_join
+from tests.conftest import rank_regime
 
 
 @pytest.fixture(scope="module")
@@ -43,35 +44,36 @@ def test_salted_join_rejects_right(spark, skewed):
 
 def test_percent_rank_paths_agree_on_nan(spark):
     """Regression (r8 review): the range-partitioned path used to bucket
-    NaN with the NULLs (bucket -1), flipping its rank position vs both
-    the broadcast-map path and true PERCENT_RANK (Spark sorts NaN as the
-    LARGEST value).  Both regimes must agree on the same data."""
+    NaN with the NULLs (bucket -1), flipping its rank position vs true
+    PERCENT_RANK (Spark sorts NaN as the LARGEST value).  Both regimes —
+    spread values and a hot value over the same tail, asserted on the
+    plan — must agree with it."""
     from pyspark.sql import Window as W
 
     from kusuma_metamorph_etl_spark.operators.windows import (
         global_percent_rank,
     )
 
-    vals = [float(i) for i in range(500)] + [float("nan")] + [None] * 2
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    truth = {
-        ("nan" if r["x"] != r["x"] else r["x"]): r["pr"]
-        for r in df.select(
-            "x", F.percent_rank().over(W.orderBy(F.desc("x"))).alias("pr")
-        ).collect()
-        if r["x"] is not None
-    }
-    for low_card in (True, False):
-        got = {
-            ("nan" if r["x"] != r["x"] else r["x"]): r["percent_rank"]
-            for r in global_percent_rank(
-                df, "x", descending=True, low_cardinality=low_card
+    tail = [float(i) for i in range(500)] + [float("nan")] + [None] * 2
+    for vals, regime in ((tail, "spread"), ([250.0] * 5000 + tail, "collapsed")):
+        df = spark.createDataFrame([(v,) for v in vals], "x double")
+        truth = {
+            ("nan" if r["x"] != r["x"] else r["x"]): r["pr"]
+            for r in df.select(
+                "x", F.percent_rank().over(W.orderBy(F.desc("x"))).alias("pr")
             ).collect()
             if r["x"] is not None
         }
-        assert abs(got["nan"] - truth["nan"]) < 1e-9, (low_card, got["nan"])
+        out = global_percent_rank(df, "x", descending=True)
+        assert rank_regime(out) == regime
+        got = {
+            ("nan" if r["x"] != r["x"] else r["x"]): r["percent_rank"]
+            for r in out.collect()
+            if r["x"] is not None
+        }
+        assert abs(got["nan"] - truth["nan"]) < 1e-9, (regime, got["nan"])
         for probe in (0.0, 250.0, 499.0):
-            assert abs(got[probe] - truth[probe]) < 1e-9, (low_card, probe)
+            assert abs(got[probe] - truth[probe]) < 1e-9, (regime, probe)
 
 
 def test_percent_rank_timestamp_input(spark):
@@ -96,25 +98,54 @@ def test_percent_rank_timestamp_input(spark):
             "ts", F.percent_rank().over(W.orderBy(F.desc("ts"))).alias("pr")
         ).collect()
     }
-    got = {
-        r["ts"]: r["percent_rank"]
-        for r in global_percent_rank(
-            df, "ts", descending=True, low_cardinality=False
-        ).collect()
-    }
+    out = global_percent_rank(df, "ts", descending=True)
+    assert rank_regime(out) == "spread"
+    got = {r["ts"]: r["percent_rank"] for r in out.collect()}
     for k in truth:
         assert abs(got[k] - truth[k]) < 1e-9
 
 
+def test_ntile_timestamp_and_date_input(spark):
+    """Regression: global_ntile's range regime bucketed with
+    approxQuantile, which is numeric-only, so spread timestamp/date keys
+    crashed it.  The core's order-isomorphic shadow (shared with
+    global_percent_rank) ranks them; tiles equal Spark's NTILE over the
+    same total order, including tied and NULL keys."""
+    import datetime as dt
+
+    from pyspark.sql import Window as W
+
+    from kusuma_metamorph_etl_spark.operators.windows import global_ntile
+
+    t0 = dt.datetime(2024, 6, 1)
+    rows = [(i, t0 + dt.timedelta(hours=7 * (i // 2))) for i in range(400)]
+    df = spark.createDataFrame(rows + [(400, None)], "i long, ts timestamp")
+    df = df.withColumn("d", F.to_date("ts"))
+    for key in ("ts", "d"):
+        truth = {
+            r["i"]: r["nt"]
+            for r in df.select(
+                "i",
+                F.ntile(7)
+                .over(W.orderBy(F.desc(key), F.asc("i")))
+                .alias("nt"),
+            ).collect()
+        }
+        out = global_ntile(df, key, [F.asc("i")], 7, "nt", descending=True)
+        assert rank_regime(out) == "spread", key
+        assert {r["i"]: r["nt"] for r in out.collect()} == truth, key
+
+
 def test_percent_rank_hot_value_with_huge_distinct_tail(spark):
     """Regression (r8 review): collapsed row-quantiles used to route to
-    the broadcast rank map even when a skew-hidden distinct tail was
-    huge (the exact OOM that path must avoid).  The distinct-bucketed
-    regime ranks by value counts; values agree with PERCENT_RANK."""
+    a broadcast rank map even when a skew-hidden distinct tail was huge
+    (an O(distinct) broadcast).  The collapsed regime buckets the
+    distinct values weighted by their counts; values agree with
+    PERCENT_RANK."""
     from pyspark.sql import Window as W
 
     from kusuma_metamorph_etl_spark.operators.windows import (
-        _percent_rank_distinct_bucketed,
+        global_percent_rank,
     )
 
     # 5000 copies of the hot value + a 500-value distinct tail
@@ -126,7 +157,8 @@ def test_percent_rank_hot_value_with_huge_distinct_tail(spark):
             "x", F.percent_rank().over(W.orderBy(F.desc("x"))).alias("pr")
         ).collect()
     }
-    out = _percent_rank_distinct_bucketed(df, "x", "percent_rank", True, 16)
+    out = global_percent_rank(df, "x", descending=True)
+    assert rank_regime(out) == "collapsed"
     got = {r["x"]: r["percent_rank"] for r in out.collect()}
     assert abs(got[0.0] - truth[0.0]) < 1e-9   # hot value: rank 500/(n-1)
     for probe in (1.0, 250.0, 500.0):
