@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.functions.numeric import decimal_round
 from kusuma_metamorph_etl_spark.operators.windows import global_percent_rank
+from kusuma_metamorph_etl_spark.session import share
 from kusuma_metamorph_etl_spark.sources.sinks import stamp_snapshot
 
 FINAL_COLUMNS = [
@@ -60,9 +61,9 @@ def customer_sales_report(
     """Build the customer-sales-report mart (one row per qualifying sale).
 
     ``persist_intermediate`` shares the enriched fact between the tiering
-    step's passes through a lazy ``localCheckpoint``: it is computed by
-    the first action that reads it and released when the result frame is
-    garbage-collected (``False`` recomputes it per pass instead)."""
+    step's passes (:func:`~kusuma_metamorph_etl_spark.session.share`): it
+    is computed by the first action that reads it (``False`` recomputes
+    it per pass instead)."""
 
     # FIL: status IN ('Delivered', 'Shipped')  (`fil_isin`).
     fil_sales = sales.filter(F.col("ORDER_STATUS").isin("Delivered", "Shipped"))
@@ -119,15 +120,13 @@ def customer_sales_report(
     # branch pruned to 3 columns); with the probe making it 3+ passes the
     # trade-off flips: persist wins 1.1s vs 2.3s warm / 3.2s vs 7.0s cold
     # at sf0.1 (3-rep A/B, this VM).  Re-measure if the consumer count
-    # changes again.  Shared via LAZY localCheckpoint, not persist():
-    # nothing here can unpersist after the caller's action, so persist
-    # pinned one cache-manager entry per build for the session lifetime
-    # AND let later identical builds silently reuse it (bench reps then
-    # measure cache reads — the dedup_substring measurement-correction
-    # class, bench.py notes).  The checkpoint RDD is ContextCleaner-
-    # released when the result frame is dropped.
+    # changes again.  Shared, not persist(): nothing here can unpersist
+    # after the caller's action, so persist pinned one cache-manager
+    # entry per build for the session lifetime AND let later identical
+    # builds silently reuse it (bench reps then measure cache reads —
+    # the dedup_substring measurement-correction class, bench.py notes).
     if persist_intermediate:
-        exp = exp.localCheckpoint(eager=False)
+        exp = share(exp)
 
     # WIN 1: global percentile tiers — scalable exact percent_rank.
     # SALE_AMOUNT is near-continuous money, so its quantiles spread and

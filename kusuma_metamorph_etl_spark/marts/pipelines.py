@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from kusuma_metamorph_etl_spark.marts.supplier_performance import FINAL_COLUMNS
 from kusuma_metamorph_etl_spark.plans.pipeline import Pipeline
 from kusuma_metamorph_etl_spark.plans.quality import duplicate_gate
+from kusuma_metamorph_etl_spark.session import share
 from kusuma_metamorph_etl_spark.sources.sinks import stamp_snapshot
 
 
@@ -138,12 +139,11 @@ def supplier_performance_pipeline(
         )
         .stage(
             # the persist boundary the pipeline module docstring promises:
-            # the gate's collect() materializes the checkpoint, so the
+            # the gate's collect() materializes the share, so the
             # caller's first action reuses it instead of recomputing the
-            # whole mart (lazy localCheckpoint: GC-released, no cache-
-            # manager pin — see customer_sales_report.py)
+            # whole mart
             "PERSIST_Boundary",
-            lambda df: df.localCheckpoint(eager=False),
+            share,
             kind="TGT",
         )
         .stage(

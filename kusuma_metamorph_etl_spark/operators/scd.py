@@ -21,6 +21,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kusuma_metamorph_etl_spark.session import share
+
 OPEN_END = "9999-12-31"
 
 
@@ -136,20 +138,21 @@ def scd2_merge(
     # the join subtree, 12 scans of the dimension table.  One flat
     # projection resolves the side-qualified attributes, presence
     # markers, change flag and effective date (eff may reference ``u.``,
-    # so it must resolve here), then a lazy localCheckpoint
-    # (ContextCleaner-released) shares the materialized diff and the
-    # branches become narrow filters.  eqNullSafe never yields NULL, so
-    # the change flag is always boolean.
-    flat = cmp.select(
-        *[F.col(k) for k in key],
-        *[F.col(f"c.{a}").alias(f"__ca_{a}") for a in attrs],
-        *[F.col(f"u.{a}").alias(f"__ua_{a}") for a in attrs],
-        F.col("c.valid_from").alias("__c_from"),
-        exists_c.alias("__ec"),
-        exists_u.alias("__eu"),
-        changed.alias("__ch"),
-        eff.alias("__eff"),
-    ).localCheckpoint(eager=False)
+    # so it must resolve here), then share() materializes the diff once
+    # and the branches become narrow filters.  eqNullSafe never yields
+    # NULL, so the change flag is always boolean.
+    flat = share(
+        cmp.select(
+            *[F.col(k) for k in key],
+            *[F.col(f"c.{a}").alias(f"__ca_{a}") for a in attrs],
+            *[F.col(f"u.{a}").alias(f"__ua_{a}") for a in attrs],
+            F.col("c.valid_from").alias("__c_from"),
+            exists_c.alias("__ec"),
+            exists_u.alias("__eu"),
+            changed.alias("__ch"),
+            eff.alias("__eff"),
+        )
+    )
 
     u_cols = [*key, *[F.col(f"__ua_{a}").alias(a) for a in attrs]]
     c_cols = [*key, *[F.col(f"__ca_{a}").alias(a) for a in attrs]]

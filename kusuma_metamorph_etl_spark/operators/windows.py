@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, NumericType, TimestampNTZType, TimestampType
 
+from kusuma_metamorph_etl_spark.session import share
+
 
 def top_k_per_group(
     df: DataFrame,
@@ -203,15 +205,10 @@ def _global_position(
             .drop("__bkt", "__in_bkt", "__bkt_offset")
         )
     else:
-        counts = (
-            keyed.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            # shared by approxQuantile's driver action, the in-bucket
-            # window and bucket_offsets — without one materialization the
-            # O(n) scan + O(distinct) aggregation re-runs three times
-            # (lazy localCheckpoint: GC-released, no cache-manager pin)
-            .localCheckpoint(eager=False)
-        )
+        # shared by approxQuantile's driver action, the in-bucket
+        # window and bucket_offsets — without one materialization the
+        # O(n) scan + O(distinct) aggregation re-runs three times
+        counts = share(keyed.groupBy(key).agg(F.count(F.lit(1)).alias("__cnt")))
         values, _ = quantile_bucket(counts, key, num_parts)
         order = F.col(key).desc() if descending else F.col(key).asc()
         before_in_bkt = Window.partitionBy("__bkt").orderBy(order).rowsBetween(

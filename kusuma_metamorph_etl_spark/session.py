@@ -15,13 +15,16 @@ session per process, configured for scale:
   move batches, not rows.
 * Session timezone pinned to UTC so timestamp semantics are stable across
   driver machines (and match the DuckDB oracle used by the test harness).
+
+It also owns the one materialization policy for shared intermediates:
+:func:`share`.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Configs that are correct for BOTH local[N] testing and a large cluster.
 # Cluster-shape-dependent knobs (shuffle partitions, memory) are resolved in
@@ -145,3 +148,41 @@ def stop_session(spark: SparkSession) -> None:
     """Stop the session.  Only for process shutdown — transformations share
     one session (unlike the reference's per-task lifecycle)."""
     spark.stop()
+
+
+def share(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once for all of its consumers — the engine's one
+    primitive for a shared intermediate (a frame read by several plan
+    branches or driver actions, or an iterative loop's per-round frame).
+
+    Lineage is truncated either way, so the result is a snapshot: plans
+    of iterative loops stay constant-depth, and a lost block fails loud
+    instead of silently recomputing from a source that may have changed
+    since the first read.  How the blocks are stored follows Spark's own
+    deployment setting, so the engine adds no option of its own:
+
+    * no checkpoint dir on the SparkContext (the default):
+      ``localCheckpoint`` — unreplicated blocks on the executors that
+      computed them.  Unlike ``persist()`` nothing is pinned in the
+      CacheManager: the ContextCleaner releases the blocks once the last
+      DataFrame referencing them is garbage-collected.  Losing an
+      executor loses its blocks, and a later read fails with
+      ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``;
+    * a checkpoint dir set (``--conf spark.checkpoint.dir=<dir>`` or
+      ``SparkContext.setCheckpointDir``): reliable ``checkpoint()`` into
+      that directory, which survives executor loss at the cost of one
+      write and read of the frame (a lazy share also computes the frame
+      a second time to write it, after the first action that reads it —
+      Spark's RDD-checkpoint contract).  Point it at a fault-tolerant
+      filesystem on clusters with preemptible nodes or dynamic
+      allocation.  The files stay after the job unless
+      ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on.
+
+    ``eager=False`` defers the materialization to the first action that
+    reads the frame, so sharing costs no job of its own; ``eager=True``
+    materializes now, for callers that need the snapshot before their
+    source changes or goes away, or read a per-round signal from it.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint(eager=eager)

@@ -275,6 +275,41 @@ def publish_snapshot(
     return version_dir
 
 
+def current_version(spark: SparkSession, table_root: str) -> str | None:
+    """The version directory name (``"v=..."``) the manifest points at,
+    or None ONLY when the manifest genuinely does not exist yet (nothing
+    published).
+
+    Any OTHER failure raises — a corrupt manifest, a transient
+    filesystem error: read as "nothing published", it would send a
+    streaming sink into its init path, which then atomically publishes a
+    one-micro-batch table over the manifest and silently loses all
+    history (r9 review)."""
+    import json
+
+    from pyspark.errors.exceptions.base import AnalysisException
+
+    try:
+        # read via spark.read.text: filesystem-portable, and py4j cannot
+        # fill a Python-side buffer through Java readFully (arrays copy).
+        # NOTE the visible (non-underscore) name: _-prefixed files are
+        # hidden from Hadoop input formats and would read as empty
+        line = spark.read.text(f"{table_root}/manifest.json").collect()[0]["value"]
+    except AnalysisException as e:
+        msg = str(e)
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            return None
+        raise
+    return json.loads(line)["current"]
+
+
+def _published_version(spark: SparkSession, table_root: str) -> str:
+    current = current_version(spark, table_root)
+    if current is None:
+        raise FileNotFoundError(f"nothing published under {table_root}")
+    return current
+
+
 def read_published(
     spark: SparkSession, table_root: str, version: str | None = None
 ) -> DataFrame:
@@ -283,16 +318,9 @@ def read_published(
     (every publish keeps its predecessors until :func:`vacuum_versions`
     removes them; a vacuumed version raises parquet's path error rather
     than silently reading something else)."""
-    import json
-
     if version is not None:
         return spark.read.parquet(f"{table_root}/v={version}")
-    # read via spark.read.text: filesystem-portable, and py4j cannot
-    # fill a Python-side buffer through Java readFully (arrays copy).
-    # NOTE the visible (non-underscore) name: _-prefixed files are
-    # hidden from Hadoop input formats and would read as empty
-    line = spark.read.text(f"{table_root}/manifest.json").collect()[0]["value"]
-    current = json.loads(line)["current"]
+    current = _published_version(spark, table_root)
     return spark.read.parquet(f"{table_root}/{current}")
 
 
@@ -305,8 +333,6 @@ def vacuum_versions(
     :func:`publish_snapshot`: publish keeps every version; vacuum is the
     explicit, bounded cleanup step (deletion is the irreversible action,
     so it is its own call, not a publish side effect)."""
-    import json
-
     from py4j.java_gateway import java_import
 
     jvm = spark.sparkContext._jvm
@@ -314,9 +340,7 @@ def vacuum_versions(
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     root = jvm.Path(table_root)
     fs = root.getFileSystem(conf)
-    current = json.loads(
-        spark.read.text(f"{table_root}/manifest.json").collect()[0]["value"]
-    )["current"]
+    current = _published_version(spark, table_root)
     versions = []
     for status in fs.listStatus(root):
         name = status.getPath().getName()

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kusuma_metamorph_etl_spark.operators.scd import scd2_init, scd2_merge
+from kusuma_metamorph_etl_spark.sources.sinks import current_version
 
 
 def _run_foreach_batch(stream_df, fn, checkpoint_dir: str, available_now: bool):
@@ -43,29 +44,12 @@ def _run_foreach_batch(stream_df, fn, checkpoint_dir: str, available_now: bool):
 
 def _read_current(spark, table_root: str):
     """(current version name, its DataFrame) from the manifest pointer —
-    or (None, None) ONLY when the manifest genuinely does not exist yet
-    (the first-batch init case).
-
-    Any OTHER failure raises: the r9 review caught a bare ``except
-    Exception`` here that turned a transient filesystem error or a
-    corrupt manifest into the init path, which then atomically published
-    a one-micro-batch table over the manifest — the exact silent
-    all-history-lost failure this design exists to prevent.
-    """
-    import json
-
-    from pyspark.errors.exceptions.base import AnalysisException
-
-    try:
-        line = spark.read.text(f"{table_root}/manifest.json").collect()[0][
-            "value"
-        ]
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None, None
-        raise
-    current = json.loads(line)["current"]  # corrupt manifest: raise loud
+    or (None, None) ONLY when nothing is published yet (the first-batch
+    init case); any other failure raises (see
+    :func:`sources.sinks.current_version`)."""
+    current = current_version(spark, table_root)
+    if current is None:
+        return None, None
     return current, spark.read.parquet(f"{table_root}/{current}")
 
 

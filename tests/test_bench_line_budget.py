@@ -44,7 +44,21 @@ def test_final_line_is_valid_json_with_contract_keys():
     assert set(parsed["queries"]) == set(bench.HEADLINE)
     # 2-decimal rounding at this scale (0.214 -> 0.21).
     assert parsed["queries"]["agg_groupby_multi"] == 0.21
-    assert parsed["value"] == round(0.214 * len(bench.HEADLINE), 2)
+    assert parsed["value"] == round(sum(parsed["queries"].values()), 2)
+
+
+def test_final_line_value_is_sum_of_emitted_values():
+    # Rounding each row and the unrounded total separately made them
+    # disagree: two 0.004 s rows emit 0 and 0 but a total of 0.01.
+    parsed = json.loads(bench._final_line({"a": 0.004, "b": 0.004}, 0.1))
+    assert parsed["queries"] == {"a": 0.0, "b": 0.0}
+    assert parsed["value"] == 0.0
+    # On the 1-decimal fallback the total follows the emitted values too.
+    timings = {f"synthetic_added_row_{i:03d}": 12.34 for i in range(90)}
+    timings.update({name: 12.34 for name in bench.HEADLINE})
+    parsed = json.loads(bench._final_line(timings, 0.1))
+    assert parsed["queries"]["synthetic_added_row_000"] == 12.3
+    assert parsed["value"] == round(sum(parsed["queries"].values()), 1)
 
 
 def test_final_line_degrades_to_one_decimal_rather_than_overflow():

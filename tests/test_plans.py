@@ -846,3 +846,75 @@ def test_sessionize_stream_prunes_input_columns(spark, sf_small):
     # columns are pruned from the shuffle + Arrow boundary
     head = analyzed.split("Project", 1)[0]
     assert "props" not in head
+
+
+def _raw_checkpoint_calls(source: str, in_session_module: bool) -> list[int]:
+    """Line numbers of ``.localCheckpoint(``/``.checkpoint(`` calls in
+    ``source`` — anywhere except inside ``session.share`` itself.  AST
+    calls only, so comments and docstrings never count."""
+    import ast
+
+    hits: list[int] = []
+
+    def visit(node, in_share: bool) -> None:
+        for child in ast.iter_child_nodes(node):
+            inside = in_share or (
+                in_session_module
+                and isinstance(child, ast.FunctionDef)
+                and child.name == "share"
+            )
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("localCheckpoint", "checkpoint")
+                and not inside
+            ):
+                hits.append(child.lineno)
+            visit(child, inside)
+
+    visit(ast.parse(source), False)
+    return hits
+
+
+def test_every_checkpoint_goes_through_share():
+    """One materialization policy for shared intermediates: outside
+    ``session.share`` no package module calls ``localCheckpoint`` or
+    ``checkpoint`` directly, so a deployment's checkpoint dir makes every
+    share point executor-loss-safe."""
+    from pathlib import Path
+
+    import kusuma_metamorph_etl_spark
+
+    pkg = Path(kusuma_metamorph_etl_spark.__file__).parent
+    offenders = [
+        f"{path.relative_to(pkg)}:{line}"
+        for path in sorted(pkg.rglob("*.py"))
+        for line in _raw_checkpoint_calls(
+            path.read_text(), path == pkg / "session.py"
+        )
+    ]
+    assert offenders == [], offenders
+    # the allowed sites really are there: the scanner sees share's calls
+    # once the exemption is lifted
+    assert len(_raw_checkpoint_calls((pkg / "session.py").read_text(), False)) == 2
+
+
+def test_checkpoint_scanner_flags_planted_violation():
+    planted = '''
+"""Docstring mentioning df.localCheckpoint(eager=False) is fine."""
+# so is a comment: df.checkpoint(eager=True)
+
+
+def share(df):
+    return df.localCheckpoint(eager=False)
+
+
+def helper(df):
+    return df.groupBy("k").count().localCheckpoint(eager=True)
+
+
+other = lambda df: df.checkpoint()
+'''
+    # outside session.py even a function named share is no exemption
+    assert _raw_checkpoint_calls(planted, False) == [7, 11, 14]
+    assert _raw_checkpoint_calls(planted, True) == [11, 14]

@@ -319,6 +319,34 @@ def test_vacuum_keeps_newest_and_never_the_current(spark, tmp_path):
     assert read_published(spark, root).count() == 12
 
 
+def test_current_version_is_none_only_for_a_missing_manifest(spark, tmp_path):
+    """One manifest reader for publish, vacuum and the streaming sinks:
+    nothing published reads as None, but a corrupt manifest raises —
+    read as "nothing published" it would send a streaming sink into its
+    init path and publish over the whole history."""
+    import pytest
+
+    from kusuma_metamorph_etl_spark.sources.sinks import (
+        current_version,
+        publish_snapshot,
+        read_published,
+        vacuum_versions,
+    )
+
+    root = str(tmp_path / "table")
+    assert current_version(spark, root) is None
+    with pytest.raises(FileNotFoundError):
+        read_published(spark, root)
+    with pytest.raises(FileNotFoundError):
+        vacuum_versions(spark, root)
+    publish_snapshot(spark, spark.range(3), root, "7")
+    assert current_version(spark, root) == "v=7"
+    with open(f"{root}/manifest.json", "w") as fh:
+        fh.write('{"current": ')
+    with pytest.raises(ValueError):
+        current_version(spark, root)
+
+
 def test_read_published_time_travel(spark, tmp_path):
     from kusuma_metamorph_etl_spark.sources.sinks import (
         publish_snapshot,
